@@ -1,0 +1,10 @@
+from __future__ import annotations
+
+import sys
+from pathlib import Path
+
+BENCH = Path(__file__).resolve().parent.parent
+REPO = BENCH.parent
+for p in (str(REPO), str(BENCH)):
+    if p not in sys.path:
+        sys.path.insert(0, p)
