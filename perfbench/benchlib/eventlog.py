@@ -3,9 +3,10 @@ directory form).
 
 Only what the per-layer report needs is kept: jobs with the harness span that
 submitted them (the ``perfbench.span`` local property, inherited by every job
-AQE submits for a query), and successful tasks with their duration, shuffle
-write bytes and the Python-exec SQL metrics Spark attaches to tasks of stages
-that run a Python worker.
+AQE submits for a query) and their submission/completion times, and successful
+tasks with their duration, shuffle write bytes and the Python-exec SQL metrics
+Spark attaches to tasks of stages that run a Python worker.  Failed task
+attempts are skipped; the run's failed/attempted counts cover failures.
 """
 
 from __future__ import annotations
@@ -13,6 +14,8 @@ from __future__ import annotations
 import json
 import os
 from dataclasses import dataclass, field
+
+from .stats import union_length
 
 SPAN_PROPERTY = "perfbench.span"
 
@@ -41,13 +44,14 @@ class Job:
     job_id: int
     span: str | None
     stage_ids: list[int]
+    submit_ms: float = 0.0
+    end_ms: float = 0.0
 
 
 @dataclass
 class EventLog:
     jobs: list[Job] = field(default_factory=list)
     tasks: list[Task] = field(default_factory=list)
-    failed_tasks: int = 0
 
     def jobs_in(self, spans: set[str]) -> list[Job]:
         return [j for j in self.jobs if j.span in spans]
@@ -61,6 +65,12 @@ class EventLog:
                 owner.setdefault(sid, j.job_id)
         ids = {j.job_id for j in jobs}
         return [t for t in self.tasks if owner.get(t.stage_id) in ids]
+
+
+def busy_s(jobs: list[Job]) -> float:
+    """Wall time during which at least one of ``jobs`` ran (the union of
+    their submission→completion intervals), in seconds."""
+    return union_length((j.submit_ms, j.end_ms) for j in jobs) / 1000.0
 
 
 def read_events(path: str) -> list[dict]:
@@ -93,18 +103,21 @@ def _num(value) -> float:
 
 def parse_events(events: list[dict]) -> EventLog:
     log = EventLog()
+    ends: dict[int, float] = {}
     for e in events:
         kind = e.get("Event")
         if kind == "SparkListenerJobStart":
             props = e.get("Properties") or {}
             log.jobs.append(Job(job_id=int(e["Job ID"]),
                                 span=props.get(SPAN_PROPERTY),
-                                stage_ids=[int(s) for s in e.get("Stage IDs", [])]))
+                                stage_ids=[int(s) for s in e.get("Stage IDs", [])],
+                                submit_ms=_num(e.get("Submission Time"))))
+        elif kind == "SparkListenerJobEnd":
+            ends[int(e["Job ID"])] = _num(e.get("Completion Time"))
         elif kind == "SparkListenerTaskEnd":
             info = e.get("Task Info") or {}
             reason = (e.get("Task End Reason") or {}).get("Reason")
             if info.get("Failed") or reason not in (None, "Success"):
-                log.failed_tasks += 1
                 continue
             py = {}
             for acc in info.get("Accumulables") or []:
@@ -118,6 +131,8 @@ def parse_events(events: list[dict]) -> EventLog:
                 duration_ms=_num(info.get("Finish Time")) - _num(info.get("Launch Time")),
                 shuffle_write_bytes=int(shuffle or 0),
                 py=py))
+    for j in log.jobs:
+        j.end_ms = ends.get(j.job_id, j.submit_ms)
     log.jobs.sort(key=lambda j: j.job_id)
     return log
 

@@ -1,13 +1,13 @@
 """Seeded benchmark corpora, generated outside the timed window.
 
-Every seed yields the same number of text pages: the fixtures and the
-seeded random docs are taken in generation order up to a page target, then
-the seeded giant docs are added, so seeds differ in content, not in size.
+Every seed yields the same number of text pages (see ``generate``), so seeds
+differ in content, not in size, and pages_per_s is comparable across seeds.
 A corpus is written once per (workload, seed, generator content) under the
 benchmark's work directory: the cache key hashes the generator's source files
 (the program's corpus module and this one) and the generation parameters, so
-a changed generator can never be served a stale file.  Each corpus carries a fingerprint (docs, pages, spans, bytes and
-a content digest) that every result records.
+a changed generator can never be served a stale file.  Each corpus carries a
+fingerprint (docs, pages, spans, bytes and a content digest) that every result
+records.
 """
 
 from __future__ import annotations
@@ -53,25 +53,28 @@ def _pages(doc: dict) -> int:
 
 
 def generate(seed: int, params: dict) -> list[dict]:
-    """``gen_corpus`` docs cut at ``params["pages"]`` text pages, plus
-    ``skew_docs`` giant docs of ``skew_spans`` spans each."""
+    """``gen_corpus`` docs with exactly ``params["pages"]`` text pages: the
+    ``skew_docs`` giant docs of ``skew_spans`` spans each count first, then
+    the fixtures and random docs are taken in generation order, skipping any
+    doc that would overshoot the target."""
     from page_evaluator_spark.corpus import gen_corpus
 
     params = dict(params)
     target = params.pop("pages")
     skew = {k: params.pop(k) for k in ("skew_docs", "skew_spans") if k in params}
-    docs, pages = [], 0
+    giants = gen_corpus(0, seed=seed, include_fixtures=False, **skew) if skew else []
+    left = target - sum(_pages(d) for d in giants)
+    docs = []
     # a random doc averages several text pages, so `target` docs are plenty
     for doc in gen_corpus(target, seed=seed, **params):
-        if pages >= target:
+        if left == 0:
             break
-        docs.append(doc)
-        pages += _pages(doc)
-    if pages < target:
-        raise RuntimeError(f"seed {seed}: only {pages} of {target} pages generated")
-    if skew:
-        docs += gen_corpus(0, seed=seed, include_fixtures=False, **skew)
-    return docs
+        if _pages(doc) <= left:
+            docs.append(doc)
+            left -= _pages(doc)
+    if left:
+        raise RuntimeError(f"seed {seed}: {left} of {target} pages not generated")
+    return docs + giants
 
 
 def _read_docs(path: str) -> list[dict]:

@@ -41,3 +41,18 @@ def summarize(values: list[float]) -> dict:
     p = tail_percentile(n)
     return {"n": n, "median": statistics.median(values), "tail_p": p,
             "tail": percentile(values, p) if p is not None else None}
+
+
+def union_length(intervals) -> float:
+    """Total length covered by (start, end) intervals, overlaps counted once."""
+    total, cur_start, cur_end = 0.0, None, None
+    for a, b in sorted(intervals):
+        if cur_end is None or a > cur_end:
+            if cur_end is not None:
+                total += cur_end - cur_start
+            cur_start, cur_end = a, b
+        else:
+            cur_end = max(cur_end, b)
+    if cur_end is not None:
+        total += cur_end - cur_start
+    return total

@@ -13,6 +13,7 @@ from contextlib import contextmanager
 from dataclasses import dataclass
 
 from .eventlog import SPAN_PROPERTY
+from .stats import union_length
 
 
 @dataclass
@@ -72,16 +73,6 @@ class Tracer:
 
     def self_time(self, span: Span) -> float:
         """Duration minus the part of the interval its child spans cover."""
-        kids = sorted((s.start, s.end) for s in self.spans if s.parent == span.id)
-        covered, cur_start, cur_end = 0.0, None, None
-        for a, b in kids:
-            a, b = max(a, span.start), min(b, span.end)
-            if cur_end is None or a > cur_end:
-                if cur_end is not None:
-                    covered += cur_end - cur_start
-                cur_start, cur_end = a, b
-            else:
-                cur_end = max(cur_end, b)
-        if cur_end is not None:
-            covered += cur_end - cur_start
+        covered = union_length((max(s.start, span.start), min(s.end, span.end))
+                               for s in self.spans if s.parent == span.id)
         return span.duration - covered

@@ -1,22 +1,26 @@
 #!/usr/bin/env python3
 """page_evaluator_spark benchmark: one workload, one run.
 
-    python3 perfbench/run.py --workload ocr_small_docs --seed 1 --seconds 8 --trace 0
+    python3 perfbench/run.py --workload ocr_small_docs --seed 1 --seconds 10 --trace 0
 
 Run from the root of a checkout of the repository.  Each run generates its
 seeded input (outside timing), starts one Spark session at local[nproc] with
-the program's own defaults, warms up, measures passes for ``--seconds`` (at
-least two passes), checks the outputs against the transliterated Java
-reference, and prints one JSON object as its last stdout line:
+the program's own defaults, warms up with untimed passes, measures passes for
+``--seconds`` and at least the workload's minimum pass count, checks the
+outputs against the transliterated Java reference, and prints one JSON object
+as its last stdout line:
 
     {"correct": ..., "attempted": ..., "failed": ..., "metrics": {...}}
 
-``--trace 0`` reports the end-to-end metrics.  ``--trace 1`` runs the session
-with Spark's event log on and, after each untagged pass, a traced twin with
-harness spans around each layer call plus cumulative plan prefixes; it
-reports the per-layer metrics and writes the full per-layer report (spans,
-layer self-times, costliest layer, tracing overhead) under
-``.perfbench_work/trace/``.
+``--trace 0`` reports the end-to-end metrics: the set-up wall time, the
+median CPU seconds of a pass and pages per CPU second, and the Python
+workers' peak memory; the pass walls are in the detail line printed before
+the result.  ``--trace 1`` runs the session with Spark's event log on and,
+beside each untagged pass, a traced twin with harness spans around each layer
+call plus cumulative plan prefixes; it reports the per-layer metrics and
+writes the full per-layer report (spans, layer self-times and their sum
+against the pass wall, the unattributed rest, costliest layer, tracing
+overhead) under ``.perfbench_work/trace/``.
 Every result also lands in ``.perfbench_work/results/`` with the host and
 corpus fingerprints.  All files the run writes stay under
 ``.perfbench_work/`` in the checkout.
@@ -38,7 +42,7 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 REPO = os.path.dirname(HERE)
 WORKDIR = os.path.join(REPO, ".perfbench_work")
 
-E2E_UNITS = {"setup_s": "s", "wall_s": "s", "pages_per_s": "1/s",
+E2E_UNITS = {"setup_s": "s", "cpu_s": "s", "pages_per_cpu_s": "1/s",
              "py_worker_peak_rss_mb": "MiB"}
 
 
@@ -61,8 +65,14 @@ def _prepare_env(workdir: str, nproc: int) -> None:
     os.environ["TMPDIR"] = tmp
     tempfile.tempdir = tmp
     os.environ["SPARK_LOCAL_DIRS"] = local
-    # JVM temp files and the hsperfdata file would otherwise go to the system temp dir
-    os.environ["JAVA_TOOL_OPTIONS"] = f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData"
+    # JVM temp files and the hsperfdata file would otherwise go to the system
+    # temp dir.  The JIT compiler threads are kept for the JVM's lifetime
+    # instead of being started and stopped as the compile queue grows and
+    # drains: a thread that ends takes its CPU counter with it, so its compile
+    # time could not be told apart from the pass's own CPU (host.CpuClock).
+    # The code compiled, and so the work of a warm pass, is the same.
+    os.environ["JAVA_TOOL_OPTIONS"] = (f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData "
+                                       "-XX:-UseDynamicNumberOfCompilerThreads")
     os.environ["SPARK_GRAFT_CPUS"] = str(nproc)
     os.chdir(workdir)  # Spark's warehouse/derby defaults are cwd-relative
 
@@ -127,7 +137,7 @@ def run(workload: str, seed: int, seconds: float, trace: bool,
     phases = {"setup": setup_s}
     if trace:
         tracer = Tracer(spark.sparkContext)
-        outcome, traced = wl.traced(spark, corpus, seconds, WORKDIR, seed, phases, tracer)
+        outcome = wl.traced(spark, corpus, seconds, WORKDIR, seed, phases, tracer)
         with tracer.span("rows_out"):
             rows = workloads.rows_out(spark, corpus, getattr(wl, "repartition", None))
     else:
@@ -143,15 +153,18 @@ def run(workload: str, seed: int, seconds: float, trace: bool,
               file=sys.stderr)
         return None
     walls = [p.wall_s for p in outcome.passes]
-    wall = statistics.median(walls)
-    e2e = {"setup_s": setup_s, "wall_s": wall, "pages_per_s": corpus.pages / wall,
+    cpus = [p.cpu_s for p in outcome.passes]
+    wall, cpu = statistics.median(walls), statistics.median(cpus)
+    e2e = {"setup_s": setup_s, "cpu_s": cpu, "pages_per_cpu_s": corpus.pages / cpu,
            "py_worker_peak_rss_mb": py_mb}
     detail = {
         "workload": workload, "seed": seed, "seconds": seconds, "trace": trace,
         "host": fingerprint, "corpus": corpus.fingerprint,
-        "samples": {"setup_s": stats.summarize([setup_s]), "wall_s": stats.summarize(walls)},
-        "passes": [{"wall_s": p.wall_s, "loadavg_before": p.load_before,
-                    "loadavg_after": p.load_after,
+        "samples": {"setup_s": stats.summarize([setup_s]), "cpu_s": stats.summarize(cpus),
+                    "wall_s": stats.summarize(walls)},
+        "wall_s": wall, "pages_per_s": corpus.pages / wall,
+        "passes": [{"wall_s": p.wall_s, "cpu_s": p.cpu_s, "steal_s": p.steal_s,
+                    "loadavg_before": p.load_before, "loadavg_after": p.load_after,
                     "overloaded": max(p.load_before, p.load_after) > nproc, **p.extra}
                    for p in outcome.passes],
         "attempted": outcome.attempted, "failed": outcome.failed,
@@ -161,44 +174,43 @@ def run(workload: str, seed: int, seconds: float, trace: bool,
     }
 
     if trace:
-        events = wl.trace_events(eventlog.load(evdir), tracer, traced["n_passes"])
+        traced = wl.trace_report(tracer, eventlog.load(evdir), corpus, len(outcome.passes))
         layers = traced["layers"]
         layer_sum = sum(layers.values())
-        u_wall, t_wall = traced["untraced_wall_s"], traced["traced_wall_s"]
-        # layers a workload does not exercise report 0 (no work done there)
-        per_layer = {name: 0.0 for name in per_layer_units}
-        per_layer.update({
+        t_wall = traced["traced_wall_s"]
+        per_layer = {
             "session.get_spark_s": setup_s,
             "session.jvm_peak_rss_mb": jvm_mb,
             "sources.input_bytes": float(corpus.fingerprint["bytes"]),
-            **traced["metrics"], **events, **rows,
+            **traced["metrics"], **rows,
+            "pass.wall_s": wall,
             "trace.wall_s": t_wall,
-            "trace.overhead_s": t_wall - u_wall,
-            "trace.layer_sum_over_wall": layer_sum / u_wall,
-        })
-        unknown = set(per_layer) - set(per_layer_units)
-        if unknown:
-            raise RuntimeError(f"metrics not declared in BENCHMARK.json: {sorted(unknown)}")
-        report = {
-            "workload": workload, "seed": seed,
-            "untraced_wall_s": u_wall, "traced_wall_s": t_wall,
-            "tracing_overhead_s": t_wall - u_wall,
-            "layer_self_s": layers, "layer_sum_s": layer_sum,
-            "layer_sum_over_wall": layer_sum / u_wall,
-            "costliest_layer": max(layers, key=layers.get),
-            "metrics": per_layer,
-            "detail": {k: v for k, v in traced.items() if k not in ("layers", "metrics")},
-            "spans": [vars(s) for s in tracer.spans],
+            "trace.overhead_s": t_wall - wall,
         }
+        if set(per_layer) != set(per_layer_units):
+            raise RuntimeError(
+                f"per-layer metrics differ from BENCHMARK.json: reported but not declared "
+                f"{sorted(set(per_layer) - set(per_layer_units))}, declared but not "
+                f"reported {sorted(set(per_layer_units) - set(per_layer))}")
+        # the layer self-times are measured apart from the pass walls; what the
+        # traced pass spends outside them is reported, not folded into a layer
+        coverage = {
+            "untraced_wall_s": wall, "traced_wall_s": t_wall,
+            "tracing_overhead_s": t_wall - wall,
+            "layer_self_s": layers, "layer_sum_s": layer_sum,
+            "layer_sum_over_wall": layer_sum / wall,
+            "layer_sum_within_10pct": abs(layer_sum / wall - 1.0) <= 0.10,
+            "unattributed_s": t_wall - layer_sum,
+            "costliest_layer": max(layers, key=layers.get),
+        }
+        report = {"workload": workload, "seed": seed, **coverage, "metrics": per_layer,
+                  "detail": traced["detail"], "spans": [vars(s) for s in tracer.spans]}
         tdir = os.path.join(WORKDIR, "trace")
         os.makedirs(tdir, exist_ok=True)
         path = os.path.join(tdir, f"{workload}-seed{seed}.json")
         with open(path, "w") as fh:
             json.dump(report, fh, indent=1)
-        detail.update({"trace_report": os.path.relpath(path, REPO),
-                       "costliest_layer": report["costliest_layer"],
-                       "layer_self_s": layers, "layer_sum_over_wall": layer_sum / u_wall,
-                       "tracing_overhead_s": t_wall - u_wall})
+        detail.update(coverage, trace_report=os.path.relpath(path, REPO))
         metrics = {k: {"value": v, "unit": per_layer_units[k]} for k, v in per_layer.items()}
     else:
         metrics = {k: {"value": v, "unit": E2E_UNITS[k]} for k, v in e2e.items()}

@@ -23,7 +23,10 @@ import sys
 sys.path.insert(0, {bench!r})
 from benchlib import workloads
 workloads.OcrSmallDocs.corpus_params = {{"pages": 40, "skew_docs": 1, "skew_spans": 20}}
+workloads.OcrSmallDocs.min_passes = 2
+workloads.OcrSmallDocs.warmup_passes = 2
 workloads.OcrIncremental.corpus_params = {{"pages": 40}}
+workloads.OcrIncremental.min_passes = 2
 import run
 sys.exit(run.main(sys.argv[1:]))
 """
@@ -50,6 +53,11 @@ def test_toy_run(workload, trace):
                              f"{workload}-seed{SEED}.json").read_text())
         assert report["costliest_layer"] in report["layer_self_s"]
         assert report["spans"] and "tracing_overhead_s" in report
-        assert result["metrics"]["parse.tasks"]["value"] > 0
+        assert report["unattributed_s"] == pytest.approx(
+            report["traced_wall_s"] - sum(report["layer_self_s"].values()))
+        # layers of both workloads are measured on every workload
+        for name in ("parse.tasks", "incremental.jobs_per_part", "catalog.files_written_per_part",
+                     "pipeline.jobs_per_pass"):
+            assert result["metrics"][name]["value"] > 0, name
     else:
         assert all(v["value"] > 0 for v in result["metrics"].values())
